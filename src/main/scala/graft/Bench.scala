@@ -254,23 +254,9 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     val runsPerQuery =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    // release per-query leftovers: operators persist intermediates, and
-    // clearCache() misses localCheckpoint blocks (RDD storage, not the
-    // SQL cache) — the iterative ops' results are checkpoint-backed.
-    // BLOCKING unpersist: async removal would run concurrently with
-    // (and distort) the next timed query. The per-operator
-    // releaseCaches() calls also drain the CachePinning queues, so the
-    // driver doesn't accumulate plan references across 46+ queries.
-    def release(): Unit = {
-      graft.operators.Dedup.releaseCaches(blocking = true)
-      graft.operators.Similarity.releaseCaches(blocking = true)
-      graft.operators.CorpusOps.releaseCaches(blocking = true)
-      graft.operators.Redaction.releaseCaches(blocking = true)
-      graft.operators.Distributions.releaseCaches(blocking = true)
-      graft.operators.Ranking.releaseCaches(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
+    // release per-query leftovers, BLOCKING: async removal would run
+    // concurrently with (and distort) the next timed query
+    def release(): Unit = Harness.release(spark, blocking = true)
     // sorted by name: Map iteration is hash-ordered, so adding a query
     // would otherwise reshuffle the whole run order between rounds and
     // make per-query times incomparable across BENCH_r{N}.json files

@@ -28,14 +28,7 @@ object IsoBench {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"[iso] $n run$i ${(System.nanoTime() - t0) / 1e9}%.2f " +
         f"cpu=${cpuSec() - c0}%.1f")
-      graft.operators.Dedup.releaseCaches(blocking = true)
-      graft.operators.Similarity.releaseCaches(blocking = true)
-      graft.operators.CorpusOps.releaseCaches(blocking = true)
-      graft.operators.Redaction.releaseCaches(blocking = true)
-      graft.operators.Distributions.releaseCaches(blocking = true)
-      graft.operators.Ranking.releaseCaches(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      Harness.release(spark, blocking = true)
     }
     spark.stop()
   }

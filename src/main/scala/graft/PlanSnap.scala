@@ -28,14 +28,7 @@ object PlanSnap {
       System.err.println(s"[plandump] wrote $p")
       // iterative operators materialize loop state while building the
       // frame — release between queries like the other harnesses
-      graft.operators.Dedup.releaseCaches()
-      graft.operators.Similarity.releaseCaches()
-      graft.operators.CorpusOps.releaseCaches()
-      graft.operators.Redaction.releaseCaches()
-      graft.operators.Distributions.releaseCaches()
-      graft.operators.Ranking.releaseCaches()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Harness.release(spark, blocking = false)
     }
     spark.stop()
   }

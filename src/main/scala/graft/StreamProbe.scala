@@ -43,14 +43,7 @@ object StreamProbe {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       println(f"[stream] $name run$i total ${(System.nanoTime() - t0) / 1e9}%.2f")
-      graft.operators.Dedup.releaseCaches(blocking = true)
-      graft.operators.Similarity.releaseCaches(blocking = true)
-      graft.operators.CorpusOps.releaseCaches(blocking = true)
-      graft.operators.Redaction.releaseCaches(blocking = true)
-      graft.operators.Distributions.releaseCaches(blocking = true)
-      graft.operators.Ranking.releaseCaches(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      Harness.release(spark, blocking = true)
     }
     spark.stop()
   }

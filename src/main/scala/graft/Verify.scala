@@ -30,17 +30,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators persist; isolate queries (incl. localCheckpoint
-      // blocks, which clearCache does not release). releaseCaches also
-      // drains the CachePinning queues (driver-side plan references).
-      graft.operators.Dedup.releaseCaches()
-      graft.operators.Similarity.releaseCaches()
-      graft.operators.CorpusOps.releaseCaches()
-      graft.operators.Redaction.releaseCaches()
-      graft.operators.Distributions.releaseCaches()
-      graft.operators.Ranking.releaseCaches()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // operators persist; isolate queries
+      Harness.release(spark, blocking = false)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

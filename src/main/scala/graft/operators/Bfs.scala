@@ -41,12 +41,14 @@ import org.apache.spark.storage.StorageLevel
   *     is a broadcast-hash join — the edge table never shuffles at all.
   *     For web-scale frontiers the join degrades gracefully to
   *     shuffle-hash/sort-merge on the co-partitioned edge table.
-  *   - Lineage is truncated with `localCheckpoint` every
-  *     `checkpointInterval` rounds — without this, plan nesting makes
-  *     round N re-derive rounds 1..N-1 and planning time blows up
-  *     (Catalyst has no fixpoint operator; the loop lives on the driver,
-  *     one action per round, same barrier structure as the reference's
-  *     `ray.get`).
+  *   - Lineage is truncated with a `localCheckpoint` every round —
+  *     without this, plan nesting makes round N re-derive rounds
+  *     1..N-1 and planning time blows up (measured on sf0.01: with
+  *     persist only, round 7's driver-side optimization took 5s; a
+  *     per-round checkpoint keeps every round flat at ~0.4s). Catalyst
+  *     has no fixpoint operator; the loop lives on the driver, one
+  *     action per round, same barrier structure as the reference's
+  *     `ray.get`.
   *   - The per-round action is the `count()` on the new frontier, which
   *     doubles as the convergence test — exactly one job per round.
   */
@@ -54,27 +56,15 @@ object Bfs {
 
   /** @param maxIterations hard stop (defense against adversarial inputs;
     *                      BFS rounds = eccentricity(source) + 1)
-    * @param checkpointInterval truncate lineage every k rounds. Default 1:
-    *        measured on sf0.01, plan nesting makes round k's driver-side
-    *        optimization cost grow super-linearly (round 7 took 5s with
-    *        only persist), while an eager per-round localCheckpoint keeps
-    *        every round flat (~0.4s) — the materialization it forces is
-    *        work the convergence count does anyway
     * @param broadcastFrontierRows frontier row-count below which the
     *        expansion join broadcasts the frontier
     * @param withPaths also compute the lexicographically-smallest
     *        shortest path (costs an array column through every shuffle;
-    *        off for distance-only analytics at scale)
-    * @param keepAqe leave AQE on inside the round loop (see
-    *        [[GraphOps.withLoopAqeDisabled]] — off by default: each
-    *        round is a fixed-shape job and AQE's per-stage scheduling
-    *        costs ~20-30% of loop wall-clock) */
+    *        off for distance-only analytics at scale) */
   final case class Config(
       maxIterations: Int = 200,
-      checkpointInterval: Int = 1,
       broadcastFrontierRows: Long = 4000000L,
-      withPaths: Boolean = false,
-      keepAqe: Boolean = false)
+      withPaths: Boolean = false)
 
   /** BFS over a DIRECTED edge table (columns `src`, `dst`). For an
     * undirected graph pass `GraphOps.symmetrize(edges)`.
@@ -88,16 +78,12 @@ object Bfs {
     * `dist == round` — no separate anti-join/visited bookkeeping, which
     * would cost a second shuffle per round.
     *
-    * Cache lifetime: when the final round lands on a checkpoint
-    * interval the result is a flat handle and every loop-internal
-    * block (including the partitioned edge table) is released before
-    * returning. When it lands on a persist interval the result still
-    * RECOMPUTES through the edge cache on block loss, so those blocks
-    * are deliberately left alive — long-lived callers issuing many
-    * runs should drop them after materializing the result (e.g.
-    * `spark.sparkContext.getPersistentRDDs.values.foreach(
-    * _.unpersist())`, the harness sweep) or size `checkpointInterval`
-    * to divide the graph's eccentricity so the last round checkpoints.
+    * The loop runs with AQE off ([[GraphOps.withLoopAqeDisabled]]):
+    * each round is a fixed-shape job and AQE's per-stage scheduling
+    * costs ~20-30% of loop wall-clock. Every round state is a lazy
+    * local checkpoint, so the result is a flat checkpoint handle and
+    * every other loop-internal block (seed, superseded rounds, the
+    * partitioned edge table) is released before returning.
     *
     * @return DataFrame(id LONG, dist LONG [, path ARRAY<LONG>]) — reached
     *         vertices only; join [[withUnreachable]] for the full set. */
@@ -111,8 +97,7 @@ object Bfs {
   def runMulti(edges: DataFrame, sources: Seq[Long],
                cfg: Config = Config()): DataFrame = {
     require(sources.nonEmpty, "at least one source vertex required")
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, cfg.keepAqe) {
+    GraphOps.withLoopAqeDisabled(edges.sparkSession) {
       runMultiLoop(edges, sources, cfg)
     }
   }
@@ -142,14 +127,15 @@ object Bfs {
         Seq($"id", lit(0L).as("dist"), array($"id").as("path"))
       else Seq($"id", lit(0L).as("dist"))
 
-    var state = sources.distinct.toDF("id").select(initCols: _*)
+    val seed = sources.distinct.toDF("id").select(initCols: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    var state = seed
     var frontier = state
     // actual seed count — a large multi-source seed set must not slip
     // under the broadcast guard on round 1
     var frontierRows = sources.distinct.size.toLong
     var iter = 0
-    val toUnpersist = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val superseded = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
     while (frontierRows > 0 && iter < cfg.maxIterations) {
       iter += 1
@@ -195,9 +181,7 @@ object Bfs {
       // truncates lineage at that job's end) — the eager form paid a
       // second cached-scan job per round for nothing (r17, the q_msf
       // fuse applied loop-wide)
-      newState =
-        if (iter % cfg.checkpointInterval == 0) newState.localCheckpoint(false)
-        else newState.persist(StorageLevel.MEMORY_AND_DISK)
+      newState = newState.localCheckpoint(false)
 
       // Next frontier = vertices first reached this round; counting it
       // is the one action per round and doubles as the convergence test.
@@ -213,17 +197,15 @@ object Bfs {
         f"[bfs] round $iter frontier=$frontierRows " +
           f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
 
-      toUnpersist += state
+      if (state ne seed) superseded += state
       state = newState
     }
-    toUnpersist.foreach(_.unpersist(false))
-    // e's blocks are freed only when the returned state's own lineage
-    // is truncated (last round landed on a checkpoint interval). A
-    // persist()-round result still RECOMPUTES through e on block loss
-    // — freeing e would turn a recoverable eviction into a hard
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; leave e to the harness
-    // getPersistentRDDs sweep instead (r17 ADVICE).
-    if (GraphOps.isFlatCheckpoint(state)) GraphOps.releaseCheckpointedFrame(e)
+    // the seed is a persisted frame (a CacheManager entry); every later
+    // round state is a checkpoint handle, whose blocks live at the RDD
+    // layer that Dataset.unpersist never touches
+    if (state ne seed) seed.unpersist(false)
+    superseded.foreach(GraphOps.releaseCheckpointedFrame(_))
+    GraphOps.releaseCheckpointedFrame(e)
     state
   }
 

@@ -46,11 +46,10 @@ object Centrality {
     * per-round discipline as [[Bfs]]: lazy localCheckpoint fused with
     * the frontier count, broadcast-while-small frontier, AQE off
     * (fixed-shape rounds over the pre-partitioned table). */
-  def pivotHarmonic(edges: DataFrame, pivots: Seq[Long],
-                    keepAqe: Boolean = false): DataFrame = {
+  def pivotHarmonic(edges: DataFrame, pivots: Seq[Long]): DataFrame = {
     require(pivots.nonEmpty, "need at least one pivot")
     require(pivots.distinct.size == pivots.size, s"duplicate pivots: $pivots")
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
+    GraphOps.withLoopAqeDisabled(edges.sparkSession) {
       runPivotHarmonic(edges, pivots)
     }
   }
@@ -269,24 +268,16 @@ object Centrality {
     * is O(|E|) exchanged rows total, never all-pairs. Level frames
     * are frontier-sized and eagerly checkpointed; superseded levels
     * release their blocks in-loop (the [[RandomWalk]] discipline). */
-  /** AQE stays ON by default (r17, measured): the per-level frames
+  /** AQE stays ON (r17, measured): the per-level frames
     * are frontier-sized, so at scan-sized shuffle.partitions the
     * level exchanges pay the shuffle-file overhead AQE coalescing
     * removes — fresh-JVM [13.5 @ CPU 44] with AQE vs [16.0 @ 96]
     * without (the KCore/Borůvka shrinking-frame doctrine; the levels
     * here are small from round 1, not just late rounds). */
   def betweennessSample(edges: DataFrame, pivots: Seq[Long],
-                        scale: Long = 1000000L,
-                        keepAqe: Boolean = true): DataFrame = {
+                        scale: Long = 1000000L): DataFrame = {
     require(pivots.nonEmpty, "need at least one pivot")
     require(pivots.distinct.size == pivots.size, s"duplicate pivots: $pivots")
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
-      runBetweenness(edges, pivots, scale)
-    }
-  }
-
-  private def runBetweenness(edges: DataFrame, pivots: Seq[Long],
-                             scale: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val verts = edges.select(col("src").as("id")).distinct()

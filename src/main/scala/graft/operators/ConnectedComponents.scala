@@ -14,10 +14,14 @@ import org.apache.spark.storage.StorageLevel
   * instead of min-dist; multi-source init instead of single-source).
   *
   * Round structure mirrors [[Bfs.run]]: ONE shuffle per round
-  * (`labels ∪ propagated → groupBy(id).min`), eager localCheckpoint to
-  * truncate lineage, and convergence detected WITHOUT a compare-join:
-  * labels only ever decrease, so the fixpoint is reached exactly when
-  * `sum(label)` stops changing — one cheap aggregate action per round.
+  * (`labels ∪ propagated → groupBy(id).min`), a lazy localCheckpoint
+  * to truncate lineage (materialized by the round's convergence
+  * probe, in the same job), and convergence detected WITHOUT a
+  * compare-join: labels only ever decrease, so the fixpoint is
+  * reached exactly when `sum(label)` stops changing — one cheap
+  * aggregate action per round. The loop runs with AQE off
+  * ([[GraphOps.withLoopAqeDisabled]]): fixed-shape rounds over the
+  * pre-partitioned edge table.
   *
   * Rounds = O(max component diameter). For the adversarial long-path
   * case [[runStarContraction]] implements the classic fix —
@@ -38,13 +42,10 @@ object ConnectedComponents {
     * @throws IllegalStateException when maxIterations is exhausted
     *         before the fixpoint — returning the partial labels would
     *         silently split real components. */
-  def run(edges: DataFrame, maxIterations: Int = 100,
-          keepAqe: Boolean = false): DataFrame = {
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
+  def run(edges: DataFrame, maxIterations: Int = 100): DataFrame =
+    GraphOps.withLoopAqeDisabled(edges.sparkSession) {
       runLoop(edges, maxIterations)
     }
-  }
 
   private def runLoop(edges: DataFrame, maxIterations: Int): DataFrame = {
     val spark = edges.sparkSession
@@ -124,23 +125,16 @@ object ConnectedComponents {
     * Output contract identical to [[run]]: (id, comp) over every
     * vertex of the input, comp = component minimum.
     *
-    * AQE stays ON by default (r17 — the [[SpanningForest.boruvka]] /
+    * AQE stays ON (r17 — the [[SpanningForest.boruvka]] /
     * [[KCore]] finding): the star edge set shrinks toward |components|
     * rows, so scan-sized shuffle partitions pay per-exchange
     * shuffle-file overhead on near-empty late rounds; AQE coalescing
     * replaces the hand-sized small-partition child session the
     * q_cc_star_deep face previously used (measured equal wall, ~25%
     * less CPU, and no session special-casing for the caller). */
-  def runStarContraction(edges: DataFrame, maxIterations: Int = 60,
-                         keepAqe: Boolean = true): DataFrame = {
+  def runStarContraction(edges: DataFrame,
+                         maxIterations: Int = 60): DataFrame = {
     val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      runStarLoop(edges, maxIterations)
-    }
-  }
-
-  private def runStarLoop(edges0: DataFrame, maxIterations: Int): DataFrame = {
-    val spark = edges0.sparkSession
     import spark.implicits._
 
     // Stats firewall (measured rationale: GraphOps.freshStats scaladoc;
@@ -149,12 +143,12 @@ object ConnectedComponents {
     // on a 20k-edge input before the firewall).
     def fresh(ckpt: DataFrame): DataFrame = GraphOps.freshStats(ckpt)
 
-    val verts = GraphOps.vertices(edges0)
+    val verts = GraphOps.vertices(edges)
     // canonical undirected pair set (hi > lo); self-loops can't affect
     // components and are dropped
     // lazy: the fingerprint probe materializes the checkpoint in the
     // same job (the Bfs round fuse)
-    var e = fresh(edges0.filter($"src" =!= $"dst")
+    var e = fresh(edges.filter($"src" =!= $"dst")
       .select(greatest($"src", $"dst").as("hi"), least($"src", $"dst").as("lo"))
       .distinct()
       .localCheckpoint(false))

@@ -300,17 +300,21 @@ object GraphOps {
   }
 
   /** Run an iterative driver loop with AQE disabled, restoring the
-    * session's setting afterwards.
+    * session's setting afterwards (also when the loop throws).
     *
     * Why: AQE plans each shuffle as a separate query stage with a
-    * scheduling round-trip between stages. For the BSP loops here
-    * ([[Bfs]], [[ConnectedComponents]], [[PageRank]]) every round is a
-    * small, fixed-shape job over an already-partitioned cached edge
-    * table — there is nothing for AQE to adapt (the one skew-prone
-    * exchange was handled up front), and the per-stage overhead is paid
-    * once per ROUND, measured ~20-30% of total BFS wall-clock at sf0.1.
-    * Callers that want AQE back inside the loop (e.g. genuinely skewed
-    * non-broadcast frontiers) pass keepAqe = true.
+    * scheduling round-trip between stages. For the fixed-shape BSP
+    * loops every round is a small job over an already-partitioned
+    * checkpointed edge table — there is nothing for AQE to adapt (the
+    * one skew-prone exchange was handled up front), and the per-stage
+    * overhead is paid once per ROUND, measured ~20-30% of total BFS
+    * wall-clock at sf0.1. The loops that run AQE-off are [[Bfs]],
+    * [[Sssp]], [[ConnectedComponents.run]],
+    * [[Centrality.pivotHarmonic]] and [[RandomWalk]]; [[PageRank]] and
+    * [[Louvain]] use it only around their edge staging, so the staged
+    * checkpoint keeps its hash partitioning. Loops whose frames shrink
+    * round over round (KCore, Scc, star contraction, Borůvka, ...)
+    * keep AQE's partition coalescing and do not call this.
     *
     * Concurrency contract: the flip is SESSION-scoped (AQE is a
     * session conf read at planning), so UNRELATED queries planned on
@@ -321,29 +325,26 @@ object GraphOps {
     * first entry saves the caller's setting, the last exit restores
     * it — so nested/concurrent loops can't corrupt the restore value. */
   private[operators] def withLoopAqeDisabled[T](
-      spark: org.apache.spark.sql.SparkSession, keepAqe: Boolean)(f: => T): T = {
-    if (keepAqe) f
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      AqeFlip.synchronized {
-        val st = AqeFlip.states.getOrElseUpdate(spark, new AqeFlip.State)
-        if (st.depth == 0) {
-          st.saved = spark.conf.getOption(key)
-          spark.conf.set(key, "false")
-        }
-        st.depth += 1
+      spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    AqeFlip.synchronized {
+      val st = AqeFlip.states.getOrElseUpdate(spark, new AqeFlip.State)
+      if (st.depth == 0) {
+        st.saved = spark.conf.getOption(key)
+        spark.conf.set(key, "false")
       }
-      try f
-      finally AqeFlip.synchronized {
-        val st = AqeFlip.states(spark)
-        st.depth -= 1
-        if (st.depth == 0) {
-          st.saved match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
-          }
-          AqeFlip.states.remove(spark)
+      st.depth += 1
+    }
+    try f
+    finally AqeFlip.synchronized {
+      val st = AqeFlip.states(spark)
+      st.depth -= 1
+      if (st.depth == 0) {
+        st.saved match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
         }
+        AqeFlip.states.remove(spark)
       }
     }
   }

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * lineage, so late rounds cost proportionally less. No driver-side
   * state beyond the convergence counter.
   *
-  * AQE stays ON by default in both faces (r17, measured — the
+  * AQE stays ON in both faces (r17, measured — the
   * [[SpanningForest.boruvka]] finding applied here): the surviving
   * edge set SHRINKS monotonically, so at the session's scan-sized
   * shuffle.partitions every late-round exchange writes a full set of
@@ -65,22 +65,16 @@ object KCore {
     * @param edges SYMMETRIZED edge table (`src`, `dst`)
     * @return DataFrame(id LONG, deg LONG): surviving vertices with
     *         their degree INSIDE the surviving subgraph. */
-  def peelBounded(edges: DataFrame, k: Int, rounds: Int,
-                  keepAqe: Boolean = true): DataFrame = {
+  def peelBounded(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k > 0 && rounds > 0, s"need k>0, rounds>0; got k=$k rounds=$rounds")
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
-      runPeel(edges, k, maxRounds = rounds, toConvergence = false)
-    }
+    runPeel(edges, k, maxRounds = rounds, toConvergence = false)
   }
 
   /** Peel to the fixed point: the true k-core. `maxRounds` bounds the
     * loop (the cascade depth is ≤ |V| but tiny in practice). */
-  def peel(edges: DataFrame, k: Int, maxRounds: Int = 100,
-           keepAqe: Boolean = true): DataFrame = {
+  def peel(edges: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
     require(k > 0 && maxRounds > 0)
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
-      runPeel(edges, k, maxRounds, toConvergence = true)
-    }
+    runPeel(edges, k, maxRounds, toConvergence = true)
   }
 
   /** One peel round: keep edges whose BOTH endpoints have degree ≥ k

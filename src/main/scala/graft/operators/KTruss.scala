@@ -104,16 +104,9 @@ object KTruss {
     *                  loop here bounds rounds — a silent partial truss
     *                  would read as converged)
     * @return DataFrame(src LONG, dst LONG, support LONG), src < dst */
-  def truss(edges: DataFrame, k: Int, maxRounds: Int = 64,
-            keepAqe: Boolean = true): DataFrame = {
+  def truss(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     require(maxRounds > 0)
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
-      runTruss(edges, k, maxRounds)
-    }
-  }
-
-  private def runTruss(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // Loop state carries (lo, hi, sup): sup is computed ON the state's

@@ -37,21 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object LabelPropagation {
 
-  /** @param edges  SYMMETRIZED edge table (`src`, `dst`) — each
-    *               undirected edge present in both directions, so
-    *               "join on src, emit to dst" enumerates exactly the
-    *               neighbor multiset of every vertex.
-    * @param rounds fixed number of synchronous update rounds
-    * @return DataFrame(id LONG, label LONG): the community label of
-    *         every vertex after `rounds` updates (labels start as the
-    *         vertex's own id). */
-  def run(edges: DataFrame, rounds: Int, keepAqe: Boolean = true): DataFrame = {
-    require(rounds > 0, s"rounds must be positive, got $rounds")
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
-      runLoop(edges, rounds)
-    }
-  }
-
   /** One synchronous update round: neighbor-label messages, then the
     * most-frequent-label argmin per vertex. Extracted (pre-checkpoint)
     * so PlanShapeSpec can pin the round's physical shape: one
@@ -78,7 +63,16 @@ object LabelPropagation {
       .select($"id", $"m.l".as("label"))
   }
 
-  private def runLoop(edges: DataFrame, rounds: Int): DataFrame = {
+  /** @param edges  SYMMETRIZED edge table (`src`, `dst`) — each
+    *               undirected edge present in both directions, so
+    *               "join on src, emit to dst" enumerates exactly the
+    *               neighbor multiset of every vertex.
+    * @param rounds fixed number of synchronous update rounds
+    * @return DataFrame(id LONG, label LONG): the community label of
+    *         every vertex after `rounds` updates (labels start as the
+    *         vertex's own id). */
+  def run(edges: DataFrame, rounds: Int): DataFrame = {
+    require(rounds > 0, s"rounds must be positive, got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
 

@@ -43,20 +43,12 @@ object PageRank {
   /** @param edges DIRECTED edge table (`src`, `dst`)
     * @return DataFrame(id LONG, rank DOUBLE) over all vertices */
   def run(edges: DataFrame, iterations: Int = 10,
-          damping: Double = 0.85, keepAqe: Boolean = true): DataFrame = {
+          damping: Double = 0.85): DataFrame = {
     require(iterations > 0)
     // damping outside [0,1) breaks the mass-≤-1 invariant that makes
     // the fixed-point Long sum overflow-free
     require(damping >= 0.0 && damping < 1.0,
       s"damping must be in [0, 1), got $damping")
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      runLoop(edges, iterations, damping)
-    }
-  }
-
-  private def runLoop(edges: DataFrame, iterations: Int,
-                      damping: Double): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -73,7 +65,7 @@ object PageRank {
     // into the checkpoint, and the per-round join reads the blocks in
     // place. Rounds still run with AQE ON (the r17 finding — coalesced
     // small exchanges — is unchanged). Count stays conf-derived.
-    val e = GraphOps.withLoopAqeDisabled(spark, keepAqe = false) {
+    val e = GraphOps.withLoopAqeDisabled(spark) {
       edges.select($"src", $"dst")
         .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
           $"src")
@@ -154,7 +146,7 @@ object PageRank {
     * contract as [[run]] (scaled-long contribution sums), same
     * dangling-mass simplification, same one-shuffle round shape (the
     * teleport flag rides the state rows like outdeg does — no extra
-    * join). A SEPARATE loop rather than a parameterized [[runLoop]]:
+    * join). A SEPARATE loop rather than a parameterized [[run]]:
     * the uniform face is bench-anchored and a conditional base column
     * would perturb its plan for no gain.
     *
@@ -163,8 +155,7 @@ object PageRank {
     *                a silently-absent source would skew all mass
     *                normalization) */
   def personalized(edges: DataFrame, sources: Seq[Long],
-                   iterations: Int = 10, damping: Double = 0.85,
-                   keepAqe: Boolean = true): DataFrame = {
+                   iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iterations > 0)
     require(damping >= 0.0 && damping < 1.0,
       s"damping must be in [0, 1), got $damping")
@@ -172,20 +163,11 @@ object PageRank {
     require(sources.distinct.size == sources.size,
       s"duplicate sources: $sources")
     val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      personalizedLoop(edges, sources, iterations, damping)
-    }
-  }
-
-  private def personalizedLoop(edges: DataFrame, sources: Seq[Long],
-                               iterations: Int,
-                               damping: Double): DataFrame = {
-    val spark = edges.sparkSession
     import spark.implicits._
 
     // AQE-off staging so the checkpoint keeps its hash partitioning —
-    // see [[runLoop]]'s r21 note
-    val e = GraphOps.withLoopAqeDisabled(spark, keepAqe = false) {
+    // see [[run]]'s r21 note
+    val e = GraphOps.withLoopAqeDisabled(spark) {
       edges.select($"src", $"dst")
         .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
           $"src")
@@ -215,7 +197,7 @@ object PageRank {
         .select(col("e.dst").as("id"),
           ($"s.rank" / $"s.outdeg" * Scale).cast("long").as("c"))
       // r20: partial-agg'd contributions + partition-aligned left join
-      // instead of the union-merge — see [[runLoop]]'s round comment
+      // instead of the union-merge — see [[run]]'s round comment
       // (the carry with its outdeg/tele payload never re-shuffles)
       val contribAgg = contribs.groupBy($"id").agg(sum($"c").as("csum"))
       val newState = state.select($"id", $"outdeg", $"tele")

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * web/dependency graphs resolve in a handful (the giant SCC leaves
   * in round 1, the bowtie periphery in the next) — and each peel
   * SHRINKS the edge set, so late rounds are cheap exactly like
-  * KCore's peeling; AQE stays ON by default (r20 — the
+  * KCore's peeling; AQE stays ON (r20 — the
   * [[ConnectedComponents.runStarContraction]] r17 doctrine for
   * shrinking-frame loops: coalesced exchanges on near-empty late
   * rounds; measured warm wall 23.5 → 9.8 s, process CPU 197 → 22 s
@@ -48,16 +48,8 @@ object Scc {
     *                    (forward diameter of the remaining subgraph)
     * @return DataFrame(id LONG, comp LONG) — comp = max id of the
     *         vertex's SCC */
-  def run(edges: DataFrame, maxOuter: Int = 64, maxFixpoint: Int = 256,
-          keepAqe: Boolean = true): DataFrame = {
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      runLoop(edges, maxOuter, maxFixpoint)
-    }
-  }
-
-  private def runLoop(edges: DataFrame, maxOuter: Int,
-                      maxFixpoint: Int): DataFrame = {
+  def run(edges: DataFrame, maxOuter: Int = 64,
+          maxFixpoint: Int = 256): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // NO stats firewall here (r20, measured): GraphOps.freshStats

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Weighted single-source shortest paths — Bellman-Ford as BSP rounds,
   * the weighted generalization of the reference's unweighted BFS
@@ -27,38 +26,34 @@ import org.apache.spark.storage.StorageLevel
   * negative-cycle semantics are not this operator's contract).
   *
   * Scale notes: identical to [[Bfs]] — edges hash-partitioned on `src`
-  * once and persisted, frontier broadcast while small, eager
-  * localCheckpoint keeps lineage flat, AQE off inside the loop.
+  * once and checkpointed, frontier broadcast while small, a lazy
+  * per-round localCheckpoint keeps lineage flat, AQE off inside the
+  * loop.
   */
 object Sssp {
 
-  /** @param maxIterations hard stop (Bellman-Ford needs ≤ |V|-1 rounds;
-    *                      exceeding the cap throws — a partial fixpoint
-    *                      is silently-wrong distances)
-    * @see [[Bfs.Config]] for the shared knobs */
-  final case class Config(
-      maxIterations: Int = 200,
-      checkpointInterval: Int = 1,
-      broadcastFrontierRows: Long = 4000000L,
-      keepAqe: Boolean = false)
+  /** Bellman-Ford needs ≤ |V|-1 rounds; [[run]] throws past this cap —
+    * a partial fixpoint is silently-wrong distances. */
+  private val MaxRounds = 200
+
+  /** Frontier row-count below which the relaxation join broadcasts
+    * the frontier (the [[Bfs.Config]] default). */
+  private val BroadcastFrontierRows = 4000000L
 
   /** SSSP over a DIRECTED weighted edge table (columns `src`, `dst`,
     * `w`). For an undirected graph pass symmetrized edges with the
     * same weight in both directions.
     *
-    * Cache lifetime: as [[Bfs.run]] — a final round on a checkpoint
-    * interval releases every loop-internal block; a final round on a
-    * persist interval leaves the edge cache alive (the result would
-    * recompute through it on block loss), for the caller to drop
-    * after materializing (the harness getPersistentRDDs sweep).
+    * The result is a projection of the last round's checkpoint; every
+    * other loop-internal block (superseded rounds, the partitioned
+    * edge table) is released before returning — and, when a round
+    * throws (a negative weight), all of them including the last.
     *
     * @return DataFrame(id LONG, dist LONG) — reached vertices only. */
-  def run(edges: DataFrame, source: Long, cfg: Config = Config()): DataFrame = {
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, cfg.keepAqe) {
-      runLoop(edges, source, cfg, boundedHops = false)
+  def run(edges: DataFrame, source: Long): DataFrame =
+    GraphOps.withLoopAqeDisabled(edges.sparkSession) {
+      runLoop(edges, source, MaxRounds, boundedHops = false)
     }
-  }
 
   /** Hop-bounded SSSP: the cheapest cost to each vertex over paths of
     * AT MOST `hops` edges — after round h the state is exactly the
@@ -71,84 +66,83 @@ object Sssp {
     * layers, where full convergence is not (the q_pagerank_2iter
     * trick). Early convergence before `hops` rounds returns the same
     * table the remaining rounds would (they'd be no-ops). */
-  def runBounded(edges: DataFrame, source: Long, hops: Int,
-                 cfg: Config = Config()): DataFrame = {
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, cfg.keepAqe) {
-      runLoop(edges, source, cfg.copy(maxIterations = hops),
-        boundedHops = true)
+  def runBounded(edges: DataFrame, source: Long, hops: Int): DataFrame =
+    GraphOps.withLoopAqeDisabled(edges.sparkSession) {
+      runLoop(edges, source, hops, boundedHops = true)
     }
-  }
 
-  private def runLoop(edges: DataFrame, source: Long, cfg: Config,
+  private def runLoop(edges: DataFrame, source: Long, maxIterations: Int,
                       boundedHops: Boolean): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val e = edges.select($"src", $"dst",
-        when($"w" < 0, raise_error(lit(
-          "negative edge weight: Sssp requires non-negative weights")))
-          .otherwise($"w".cast("long")).as("w"))
-      .repartition($"src")
-      // local checkpoint, not persist: no columnar decode on the
-      // per-round reads (r17 loop-residency doctrine; see PageRank)
-      .localCheckpoint(false)
+    // every checkpoint handle the loop creates, in creation order; the
+    // last one backs the result and is kept on success, the rest are
+    // released in the finally (all of them when a round throws)
+    val handles = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var ok = false
+    try {
+      val e = edges.select($"src", $"dst",
+          when($"w" < 0, raise_error(lit(
+            "negative edge weight: Sssp requires non-negative weights")))
+            .otherwise($"w".cast("long")).as("w"))
+        .repartition($"src")
+        // local checkpoint, not persist: no columnar decode on the
+        // per-round reads (r17 loop-residency doctrine; see PageRank)
+        .localCheckpoint(false)
+      handles += e
 
-    var state = Seq(source).toDF("id").select($"id", lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var frontier = state
-    var frontierRows = 1L
-    var iter = 0
-    var stateTruncated = true // round-0 state is an eager checkpoint
-    val toUnpersist = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var state = Seq(source).toDF("id").select($"id", lit(0L).as("dist"))
+        .localCheckpoint(true)
+      handles += state
+      var frontier = state
+      var frontierRows = 1L
+      var iter = 0
 
-    while (frontierRows > 0 && iter < cfg.maxIterations) {
-      iter += 1
-      val tRound = System.nanoTime()
-      val f0 =
-        if (frontierRows <= cfg.broadcastFrontierRows) broadcast(frontier)
-        else frontier
-      val candidates = f0.as("f").join(e.as("e"), col("f.id") === col("e.src"))
-        .select(col("e.dst").as("id"), (col("f.dist") + col("e.w")).as("dist"),
-          lit(false).as("old"))
+      while (frontierRows > 0 && iter < maxIterations) {
+        iter += 1
+        val tRound = System.nanoTime()
+        val f0 =
+          if (frontierRows <= BroadcastFrontierRows) broadcast(frontier)
+          else frontier
+        val candidates = f0.as("f").join(e.as("e"), col("f.id") === col("e.src"))
+          .select(col("e.dst").as("id"), (col("f.dist") + col("e.w")).as("dist"),
+            lit(false).as("old"))
 
-      // ONE exchange merges state and relaxations AND detects
-      // improvement: newDist = min over both, oldDist = min over the
-      // previous state only — improved iff newDist < oldDist (or the
-      // vertex is newly reached). Both aggregates are plain mins on
-      // primitive buffers: the chain stays HashAggregate/codegen.
-      var merged = state.select($"id", $"dist", lit(true).as("old"))
-        .union(candidates)
-        .groupBy($"id")
-        .agg(min($"dist").as("dist"),
-          min(when($"old", $"dist")).as("old_dist"))
-      // lazy: the frontier count materializes the checkpoint in the
-      // same job (the Bfs round fuse)
-      stateTruncated = iter % cfg.checkpointInterval == 0
-      merged =
-        if (stateTruncated) merged.localCheckpoint(false)
-        else merged.persist(StorageLevel.MEMORY_AND_DISK)
+        // ONE exchange merges state and relaxations AND detects
+        // improvement: newDist = min over both, oldDist = min over the
+        // previous state only — improved iff newDist < oldDist (or the
+        // vertex is newly reached). Both aggregates are plain mins on
+        // primitive buffers: the chain stays HashAggregate/codegen.
+        // lazy checkpoint: the frontier count materializes it in the
+        // same job (the Bfs round fuse)
+        val merged = state.select($"id", $"dist", lit(true).as("old"))
+          .union(candidates)
+          .groupBy($"id")
+          .agg(min($"dist").as("dist"),
+            min(when($"old", $"dist")).as("old_dist"))
+          .localCheckpoint(false)
+        handles += merged
 
-      frontier = merged
-        .filter($"old_dist".isNull || $"dist" < $"old_dist")
-        .select($"id", $"dist")
-      frontierRows = frontier.count()
-      System.err.println(
-        f"[sssp] round $iter improved=$frontierRows " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
+        frontier = merged
+          .filter($"old_dist".isNull || $"dist" < $"old_dist")
+          .select($"id", $"dist")
+        frontierRows = frontier.count()
+        System.err.println(
+          f"[sssp] round $iter improved=$frontierRows " +
+            f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
 
-      toUnpersist += state
-      state = merged.select($"id", $"dist")
+        state = merged.select($"id", $"dist")
+      }
+      if (frontierRows > 0 && !boundedHops) throw new IllegalStateException(
+        s"SSSP did not converge in $maxIterations rounds (Bellman-Ford " +
+          "needs at most |V|-1) — use runBounded for a hop-capped result")
+      ok = true
+      state
+    } finally {
+      // the result's own checkpoint is the last handle
+      if (ok) handles.remove(handles.size - 1)
+      handles.foreach(GraphOps.releaseCheckpointedFrame(_))
     }
-    toUnpersist.foreach(_.unpersist(false))
-    // free e only when the returned state's lineage is truncated (last
-    // round checkpointed) — a persist()-round result recomputes through
-    // e on block loss, and freeing e would make that eviction fatal;
-    // otherwise leave e to the harness sweep (r17 ADVICE, as in Bfs)
-    if (stateTruncated) GraphOps.releaseCheckpointedFrame(e)
-    if (frontierRows > 0 && !boundedHops) throw new IllegalStateException(
-      s"SSSP did not converge in ${cfg.maxIterations} rounds — raise " +
-        "maxIterations (Bellman-Ford needs at most |V|-1)")
-    state
   }
 }

@@ -60,13 +60,22 @@ class BfsSpec extends AnyFunSuite with SparkTestBase {
     assert(result.toSeq == Seq((99L, 0L)))
   }
 
-  test("checkpoint interval does not change results (deep graph)") {
-    // path graph 0-1-2-...-14: 15 rounds, crosses checkpointInterval
+  test("deep chain: 15 rounds leave only the result's checkpoint") {
+    // path graph 0-1-2-...-14: 15 rounds, each a checkpointed state
     val chain = (0L until 14L).map(i => (i, i + 1))
-    val result = Bfs.run(GraphOps.symmetrize(edgesDf(chain)), 0L,
-        Bfs.Config(checkpointInterval = 3))
-      .as[(Long, Long)].collect().sortBy(_._1)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val reached = Bfs.run(GraphOps.symmetrize(edgesDf(chain)), 0L)
+    val result = reached.as[(Long, Long)].collect().sortBy(_._1)
     assert(result.toSeq == (0L to 14L).map(i => (i, i)))
+    // the seed, every superseded round state and the staged edge table
+    // are released; the result's own checkpoint is the one new entry.
+    // Compared as "keys added" — the ContextCleaner may drop unrelated
+    // entries of earlier tests at any time.
+    val own = reached.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    assert(sc.getPersistentRDDs.keySet -- before == Set(own))
   }
 
   val graphGen: Gen[(Seq[(Long, Long)], Long)] = for {

@@ -50,14 +50,31 @@ class SsspSpec extends AnyFunSuite with SparkTestBase {
 
   test("negative weight fails loudly inside the job") {
     val e = Seq((0L, 1L, -1L))
-    val ex = intercept[Exception] {
-      Sssp.run(df(e), 0L).collect()
-    }
+    val sc = spark.sparkContext
+    val aqeKey = "spark.sql.adaptive.enabled"
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x =>
         Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(ex).exists(_.contains("negative edge weight")))
+    // local rows fail while the staging is planned (the optimizer folds
+    // the guard over a LocalRelation); a shuffled input fails in round
+    // 1's job, after the staged edge table and the round checkpoints
+    // exist
+    Seq(df(e), df(e).repartition(2)).foreach { input =>
+      val aqeBefore = spark.conf.getOption(aqeKey)
+      val before = sc.getPersistentRDDs.keySet
+      val ex = intercept[Exception] {
+        Sssp.run(input, 0L).collect()
+      }
+      assert(messages(ex).exists(_.contains("negative edge weight")))
+      // every checkpoint the run made is released (compared as "keys
+      // added": the ContextCleaner may drop unrelated entries of
+      // earlier tests at any time) ...
+      assert(sc.getPersistentRDDs.keySet -- before == Set.empty)
+      // ... and the loop's AQE-off flip was undone on the way out
+      assert(spark.conf.getOption(aqeKey) == aqeBefore)
+    }
   }
+
 
   private val graphGen: Gen[(Seq[(Long, Long, Long)], Long)] = for {
     n <- Gen.choose(2, 30)
